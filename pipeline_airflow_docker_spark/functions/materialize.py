@@ -38,6 +38,7 @@ growing the plan.
 from __future__ import annotations
 
 import atexit
+import math
 import os
 import shutil
 import tempfile
@@ -89,13 +90,14 @@ def _shm_min_free_bytes() -> int:
     box's 126 GB tmpfs. Override via SPARK_GRAFT_SCRATCH_MIN_FREE_GB;
     parsed lazily per call (an import-time parse would crash the whole
     package on a malformed value and freeze later overrides), and a
-    malformed value falls back to the default rather than raising."""
+    malformed value (unparsable, non-finite or negative) falls back to
+    the default rather than raising."""
+    default = 8 * 1024**3
     try:
-        return int(
-            float(os.environ.get("SPARK_GRAFT_SCRATCH_MIN_FREE_GB", "8")) * 1024**3
-        )
+        gb = float(os.environ.get("SPARK_GRAFT_SCRATCH_MIN_FREE_GB", "8"))
     except ValueError:
-        return 8 * 1024**3
+        return default
+    return int(gb * 1024**3) if math.isfinite(gb) and gb >= 0 else default
 
 
 def scratch_mkdtemp(prefix: str) -> str:

@@ -16,7 +16,13 @@ infinite poll loops).
 
 Every function returns the metrics dict the reference would have pushed
 to XCom (G5) — counts only, never data; bulk data moves through the
-sink paths.
+sink paths. The counts are observed inside the write job itself
+(``DataFrame.observe`` at the node being counted), the way the
+reference pushes counts it already holds: no action after the write
+re-executes the lineage (REST ``createDataFrame``, scrape UDF, CSV
+scan) to count it again. The one pre-write action left is the
+``etl_data_pipeline_mongodb_complex`` count, which IS that DAG's
+branch decision.
 """
 
 from __future__ import annotations
@@ -24,7 +30,7 @@ from __future__ import annotations
 from collections.abc import Callable, Sequence
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -36,7 +42,6 @@ from pipeline_airflow_docker_spark.operators import (
     require_keys,
     union_ragged,
 )
-from pipeline_airflow_docker_spark.operators.quality import count_gate
 from pipeline_airflow_docker_spark.sinks import (
     append_documents,
     kafka_payload,
@@ -49,6 +54,14 @@ from pipeline_airflow_docker_spark.sources import (
     read_rest_json,
     scrape_records,
 )
+
+
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row count attached to its plan. The first action
+    that runs the returned frame (here: its write) fills
+    ``obs.get["n"]``; read it only after that action succeeded."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def data_extraction(spark: SparkSession, csv_path: str, n: int = 5) -> DataFrame:
@@ -68,9 +81,9 @@ def etl_data_pipeline(
     ``read -> na.drop -> write``; the "replace" load semantics are
     ``mode("overwrite")`` (sink swaps to JDBC when a driver jar is
     deployed — ``sinks.write_jdbc_replace``)."""
-    cleaned = drop_null_rows(read_csv(spark, csv_path), how="any")
+    cleaned, n = _observed(drop_null_rows(read_csv(spark, csv_path), how="any"))
     cleaned.write.mode("overwrite").parquet(out_path)
-    return {"rows_loaded": spark.read.parquet(out_path).count()}
+    return {"rows_loaded": n.get["n"]}
 
 
 def etl_data_pipeline_mongodb(
@@ -81,9 +94,9 @@ def etl_data_pipeline_mongodb(
     ``insert_many`` (:38). The CSV->JSON->dict round-trip disappears
     (it existed only to cross task boundaries); the load is one bulk
     document append."""
-    cleaned = drop_null_rows(read_csv(spark, csv_path), how="any")
+    cleaned, n = _observed(drop_null_rows(read_csv(spark, csv_path), how="any"))
     append_documents(cleaned, collection_path)
-    return {"rows_loaded": cleaned.count()}
+    return {"rows_loaded": n.get["n"]}
 
 
 def etl_data_pipeline_mongodb_complex(
@@ -99,17 +112,17 @@ def etl_data_pipeline_mongodb_complex(
     count branch ``> 10`` (:57-62) -> Mongo load or skip -> report.
 
     The two scans union lazily (fan-in O2 is free Spark scheduling);
-    the branch is ``count_gate`` — the count IS the branch decision,
-    exactly the reference's ``nb_lignes`` XCom. The sensor is
-    orchestration (file-arrival at scale = streaming file source).
+    the one count is the branch decision, exactly the reference's
+    ``nb_lignes`` XCom, and the load branch reuses it as the loaded
+    row count. The sensor is orchestration (file-arrival at scale =
+    streaming file source).
     """
     combined = union_ragged(read_csv(spark, csv_path_1), read_csv(spark, csv_path_2))
     cleaned = drop_null_rows(combined, how="all")
     nb_lignes = cleaned.count()
-    gated = count_gate(cleaned, min_rows)
     loaded = 0
-    if not gated.isEmpty():
-        append_documents(gated, collection_path)
+    if nb_lignes > min_rows:
+        append_documents(cleaned, collection_path)
         loaded = nb_lignes
     return {"nb_lignes": nb_lignes, "rows_loaded": loaded, "branch": "load" if loaded else "skip"}
 
@@ -135,9 +148,9 @@ def kafka_to_mongo_pipeline(
     """
     posts = read_rest_json(spark, api_url, schema, fetch=fetch)
     bounded = posts.orderBy("id").limit(max_messages)
-    projected = bounded.select(F.upper("title").alias("title"))
+    projected, n = _observed(bounded.select(F.upper("title").alias("title")))
     append_documents(projected, collection_path)
-    return {"messages_processed": projected.count()}
+    return {"messages_processed": n.get["n"]}
 
 
 def kafka_to_mongo_pipeline_enhanced(
@@ -162,17 +175,25 @@ def kafka_to_mongo_pipeline_enhanced(
     ``ts`` injects a deterministic stamp for tests (default wall clock,
     the reference's *intended* ``datetime.now()`` — bug 1 fixed).
     """
-    raw = read_rest_json(spark, api_url, schema, fetch=fetch)
-    valid = require_keys(raw, ["id", "title", "body"])
+    if max_messages < 1:
+        # limit(0) makes Catalyst replace the whole lineage with an empty
+        # relation, taking the raw/valid observations with it.
+        raise ValueError(f"max_messages must be >= 1, got {max_messages}")
+    raw, n_raw = _observed(read_rest_json(spark, api_url, schema, fetch=fetch))
+    valid, n_valid = _observed(require_keys(raw, ["id", "title", "body"]))
     enriched = enrich(valid, source="jsonplaceholder_api", status="raw", ts=ts)
+    # The top-k sort drains its whole input, so raw and valid are
+    # counted in full even though only max_messages rows pass.
     bounded = enriched.orderBy("id").limit(max_messages)
-    deduped = latest_by_key(bounded, keys=["id"], order_by=["processed_timestamp"], tiebreak=["title"])
+    deduped, n_stored = _observed(
+        latest_by_key(bounded, keys=["id"], order_by=["processed_timestamp"], tiebreak=["title"])
+    )
     append_documents(deduped, collection_path)
-    n_valid, n_stored = valid.count(), deduped.count()
+    valid_rows = n_valid.get["n"]
     return {
-        "processed_items": min(n_valid, max_messages),
-        "stored_items": n_stored,
-        "invalid_items": raw.count() - n_valid,
+        "processed_items": min(valid_rows, max_messages),
+        "stored_items": n_stored.get["n"],
+        "invalid_items": n_raw.get["n"] - valid_rows,
     }
 
 
@@ -184,11 +205,11 @@ def kafka_to_mongo(
     Bug 3 fixed: consumption is bounded (AvailableNow semantics), not
     a forever-loop. ``messages`` is the raw ``value: string`` frame
     (the Kafka value column after ``cast("string")``)."""
-    decoded = messages.select(
-        F.from_json(F.col("value").cast("string"), schema).alias("r")
-    ).select("r.*")
+    decoded, n = _observed(
+        messages.select(F.from_json(F.col("value").cast("string"), schema).alias("r")).select("r.*")
+    )
     append_documents(decoded, collection_path)
-    return {"messages_processed": decoded.count()}
+    return {"messages_processed": n.get["n"]}
 
 
 def scrap_to_kafka_to_mongo_pipeline(
@@ -210,14 +231,14 @@ def scrap_to_kafka_to_mongo_pipeline(
     records = scrape_records(pages, html_col="html", max_links=max_links)
     # Kafka hop: serialize -> (broker) -> deserialize; JVM-side both ways.
     payload_schema = ", ".join(f"`{c}` {t}" for c, t in records.dtypes)
-    projected = (
+    projected, n = _observed(
         kafka_payload(records)
         .select(F.from_json("value", payload_schema).alias("r"))
         .select("r.*")
         .select(F.upper(F.trim("content")).alias("content"))
     )
     append_documents(projected, collection_path)
-    return {"messages_processed": projected.count()}
+    return {"messages_processed": n.get["n"]}
 
 
 def data_pipeline_workflow(
@@ -234,7 +255,9 @@ def data_pipeline_workflow(
     as ``{original_data, processed_at, status='processed'}`` -> insert
     -> count via XCom -> report. The wrap is the reference's only
     nested type -> ``nest_struct`` (one ``F.struct`` projection)."""
-    raw = read_rest_json(spark, api_url, schema, fetch=fetch)
-    wrapped = nest_struct(raw, wrapper="original_data", status="processed", ts=ts)
+    raw, n_raw = _observed(read_rest_json(spark, api_url, schema, fetch=fetch))
+    wrapped, n_wrapped = _observed(
+        nest_struct(raw, wrapper="original_data", status="processed", ts=ts)
+    )
     append_documents(wrapped, collection_path)
-    return {"data_count": raw.count(), "processed_count": wrapped.count()}
+    return {"data_count": n_raw.get["n"], "processed_count": n_wrapped.get["n"]}

@@ -74,9 +74,16 @@ def fetch_url_to_staging(
 # quoted embedded '\n' ('\n\x00' read back as '\n' — found by the r16
 # Hypothesis sweep); pinning '\n' restores exact fidelity for control
 # bytes adjacent to separators. The writer half pins the same lineSep.
+# charToEscapeQuoteEscaping is load-bearing as well: with escape ==
+# quote == '"', Spark defaults it to '\0', so univocity treats NUL as
+# the escape-escape character and DROPS every NUL in a quoted field
+# that also holds a doubled quote ('-\x00"' is written correctly as
+# "-\x00""" but read back as '-"'). Pinning it to '"' leaves NUL as
+# plain data.
 CSV_LOSSLESS_READ: dict[str, str | bool] = {
     "multiLine": True,
     "escape": '"',
+    "charToEscapeQuoteEscaping": '"',
     "nullValue": "\\N",
     "emptyValue": "",
     "lineSep": "\n",

@@ -83,6 +83,14 @@ ROUND_TRIP_CORPUS = [
     "\x00\n",
     "\x00",
     "\x00\x00",
+    # NUL in a quoted field that also holds a doubled quote: the
+    # reader's default escape-escape character is NUL, so these came
+    # back without it until CSV_LOSSLESS_READ pinned
+    # charToEscapeQuoteEscaping.
+    '-\x00"',
+    'N"\x00',
+    '\x00"x',
+    'q"\x00"q\x00',
 ]
 
 

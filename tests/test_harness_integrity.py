@@ -125,6 +125,8 @@ def test_bench_subprocess_stdout_survives_driver_tail():
         SPARK_GRAFT_BENCH_REPS="1",
         SPARK_GRAFT_BENCH_PASSES="1",
         SPARK_GRAFT_BENCH_KEYS="q_count_gate",
+        # A core count the host's default cannot match by accident.
+        SPARK_GRAFT_CPUS="2",
     )
     proc = subprocess.run(
         [sys.executable, os.path.join(_REPO, "bench.py")],
@@ -138,6 +140,8 @@ def test_bench_subprocess_stdout_survives_driver_tail():
     assert rec["value"] > 0
     assert rec["queries"].keys() == {"q_count_gate"}
     assert rec["runs_summary"][0]["clean"] is True
+    # The session's effective parallelism: local[2] -> defaultParallelism 2.
+    assert rec["calibration"]["cpus_effective"] == 2
     assert len(line) <= bench.STDOUT_LINE_BUDGET
     assert "# runs_full:" not in proc.stdout
     full_line = [

@@ -282,6 +282,134 @@ def test_kafka_to_mongo_bounded_decode(spark, tmp_path):
     assert spark.read.parquet(coll).count() == 2
 
 
+# ---- observed replay metrics: values and job counts -----------------
+
+def _ts():
+    return F.to_timestamp(F.lit("2024-01-01 00:00:00"))
+
+
+# 100 REST records over 7 ids; every 5th body is NULL (20 invalid).
+HOSTILE_POSTS = [
+    {"userId": 1, "id": i % 7, "title": f"t{i}", "body": None if i % 5 == 0 else "b"}
+    for i in range(100)
+]
+
+
+def _count_jobs(spark, fn) -> int:
+    """Run ``fn()`` inside a fresh job group; return the number of
+    Spark jobs it started (listener bus drained first)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{os.urandom(4).hex()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_observed_counts_on_empty_rest_batch(spark, tmp_path):
+    m = pipelines.data_pipeline_workflow(
+        spark, "http://api/posts", POSTS_SCHEMA, str(tmp_path / "wf"),
+        fetch=lambda u: [], ts=_ts(),
+    )
+    assert m == {"data_count": 0, "processed_count": 0}
+    m = pipelines.kafka_to_mongo_pipeline_enhanced(
+        spark, "http://api/posts", POSTS_SCHEMA, str(tmp_path / "enh"),
+        fetch=lambda u: [], ts=_ts(),
+    )
+    assert m == {"processed_items": 0, "stored_items": 0, "invalid_items": 0}
+
+
+@pytest.mark.parametrize("max_messages, expected", [
+    # the first 10 rows by id all carry id 0 -> one stored document
+    (10, {"processed_items": 10, "stored_items": 1, "invalid_items": 20}),
+    (1000, {"processed_items": 80, "stored_items": 7, "invalid_items": 20}),
+])
+def test_enhanced_observed_counts_hostile_batch(spark, tmp_path, max_messages, expected):
+    coll = str(tmp_path / "enh")
+    m = pipelines.kafka_to_mongo_pipeline_enhanced(
+        spark, "http://api/posts", POSTS_SCHEMA, coll,
+        max_messages=max_messages, fetch=lambda u: HOSTILE_POSTS, ts=_ts(),
+    )
+    assert m == expected
+    assert spark.read.parquet(coll).count() == expected["stored_items"]
+
+
+def test_enhanced_rejects_empty_consume_bound(spark, tmp_path):
+    # limit(0) would prune the observed raw/valid nodes from the plan.
+    with pytest.raises(ValueError, match="max_messages"):
+        pipelines.kafka_to_mongo_pipeline_enhanced(
+            spark, "http://api/posts", POSTS_SCHEMA, str(tmp_path / "enh"),
+            max_messages=0, fetch=lambda u: POSTS,
+        )
+
+
+@pytest.mark.parametrize("replay", ["etl_data_pipeline", "data_pipeline_workflow"])
+def test_failed_write_raises_without_blocking_on_observation(spark, hw_csv, tmp_path, replay):
+    import threading
+
+    blocker = tmp_path / "regular_file"
+    blocker.write_text("not a directory")
+    out = str(blocker / "out")
+    run = {
+        "etl_data_pipeline": lambda: pipelines.etl_data_pipeline(spark, hw_csv, out),
+        "data_pipeline_workflow": lambda: pipelines.data_pipeline_workflow(
+            spark, "http://api/posts", POSTS_SCHEMA, out, fetch=lambda u: POSTS, ts=_ts()),
+    }[replay]
+    outcome = {}
+
+    def target():
+        try:
+            outcome["value"] = run()
+        except Exception as exc:  # noqa: BLE001 - the outcome under test
+            outcome["error"] = exc
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(timeout=180)
+    assert not t.is_alive(), "replay blocked after a failed write"
+    assert "error" in outcome and "value" not in outcome
+
+
+def test_replay_job_counts(spark, hw_csv, tmp_path):
+    """The metrics are observed inside the write job, so a replay of a
+    REST batch or DataFrame runs exactly one job. The CSV replays add
+    only compat mode's header + inferSchema jobs per scanned source
+    and, for the branching DAG, its branch count."""
+    air = tmp_path / "airtravel.csv"
+    air.write_text("Month,1958,1959,1960\nJAN,340,360,417\nFEB,318,342,391\n")
+    grades = tmp_path / "grades.csv"
+    grades.write_text('Last name,First name,SSN,Final,Grade\nAlfalfa,Aloysius,123-45-6789,49.0,D-\n')
+    pages = spark.createDataFrame([("p1", HTML_PAGE)], "page_id STRING, html STRING")
+    msgs = spark.createDataFrame(
+        [(json.dumps(p).encode("utf-8"),) for p in POSTS], "value BINARY",
+    )
+    fetch = lambda u: HOSTILE_POSTS  # noqa: E731
+    cases = {
+        "kafka_to_mongo_pipeline_enhanced": (1, lambda o: pipelines.kafka_to_mongo_pipeline_enhanced(
+            spark, "http://api/posts", POSTS_SCHEMA, o, max_messages=10, fetch=fetch, ts=_ts())),
+        "data_pipeline_workflow": (1, lambda o: pipelines.data_pipeline_workflow(
+            spark, "http://api/posts", POSTS_SCHEMA, o, fetch=fetch, ts=_ts())),
+        "scrap_to_kafka_to_mongo_pipeline": (1, lambda o: pipelines.scrap_to_kafka_to_mongo_pipeline(
+            spark, pages, o)),
+        "kafka_to_mongo_pipeline": (1, lambda o: pipelines.kafka_to_mongo_pipeline(
+            spark, "http://api/posts", POSTS_SCHEMA, o, max_messages=10, fetch=fetch)),
+        "kafka_to_mongo": (1, lambda o: pipelines.kafka_to_mongo(spark, msgs, POSTS_SCHEMA, o)),
+        "etl_data_pipeline": (3, lambda o: pipelines.etl_data_pipeline(spark, hw_csv, o)),
+        "etl_data_pipeline_mongodb": (3, lambda o: pipelines.etl_data_pipeline_mongodb(
+            spark, hw_csv, o)),
+        "etl_data_pipeline_mongodb_complex": (7, lambda o: pipelines.etl_data_pipeline_mongodb_complex(
+            spark, str(air), str(grades), o, min_rows=2)),
+    }
+    got = {
+        name: _count_jobs(spark, lambda: run(str(tmp_path / name)))
+        for name, (_, run) in cases.items()
+    }
+    assert got == {name: jobs for name, (jobs, _) in cases.items()}
+
+
 def test_jdbc_replace_live_roundtrip(spark, tmp_path):
     """K6 executed against a real database, not just option-plumbed:
     embedded Derby (bundled with Spark for the Hive metastore) gives a

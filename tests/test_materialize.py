@@ -145,3 +145,18 @@ def test_deps_entries_die_with_the_child(spark):
     del parent
     gc.collect()
     assert parent_ref() is None  # _DEPS did not leak a strong ref
+
+
+@pytest.mark.parametrize("raw", ["inf", "-inf", "nan", "-1", "eight"])
+def test_scratch_min_free_rejects_malformed_values(monkeypatch, raw):
+    """Non-finite, negative or unparsable overrides fall back to the
+    8 GiB default instead of raising (inf used to overflow int())."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_FREE_GB", raw)
+    assert mat._shm_min_free_bytes() == 8 * 1024**3
+
+
+def test_scratch_min_free_accepts_valid_values(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_FREE_GB", "0.5")
+    assert mat._shm_min_free_bytes() == 512 * 1024**2
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_FREE_GB", "0")
+    assert mat._shm_min_free_bytes() == 0
